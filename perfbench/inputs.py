@@ -1,11 +1,10 @@
 """Benchmark inputs: build once per checkout, cache, and derive the expected
 answers from the generators' own arrays (never from the program under test).
 
-Bio fixtures come from the repo's generators (``formats._gen_fasta``,
-``formats._gen_mzml``, ``fixtures_xl.gen_vcf_xl`` / ``gen_bam_xl``). The LLM
-corpus (``documents.parquet``, the schema of the repo's sf* testdata) comes
-from a seeded generator in this file, because the benchmark may read
-nothing outside its checkout. Expected results of the
+Bio fixtures come from the repo's generators (``fixtures_xl.gen_vcf_xl`` /
+``gen_bam_xl``). The LLM corpus (``documents.parquet``, the schema of the
+repo's sf* testdata) comes from a seeded generator in this file, because
+the benchmark may read nothing outside its checkout. Expected results of the
 LLM queries are order-insensitive digests of the DuckDB oracles
 (``QuerySpec.oracle``), normalized the way ``tools/check_correctness.py``
 normalizes.
@@ -19,7 +18,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import random
 import shutil
 import time
 from dataclasses import dataclass
@@ -31,13 +29,13 @@ REPO = os.path.dirname(HERE)
 CACHE_ROOT = os.path.join(HERE, ".cache")
 
 # bump when generated content, layout or expected answers change
-VERSION = "2"
+VERSION = "3"
 # the data is fixed per checkout (so the cache serves every run); the
 # workload seed drives the op order and the region stream instead
 DATA_SEED = 42
 
 # q21_similarity_cosine_topk, q40_dedup_incremental and q52_ppl_buckets are
-# left out: each adds 3-7 s warm and 5-16 s cold to a pass (4 cores), which
+# left out: each adds 3-7 s warm and 5-16 s cold to a pass on 4 cores, which
 # a run cannot afford (see README.md)
 LLM_QUERIES = ("q19_dedup_minhash_lsh", "q26_multimodal_decode")
 # the corpus table each LLM query scans (input MB for scan_mb_s)
@@ -47,17 +45,17 @@ LLM_QUERY_TABLE = "documents"
 @dataclass(frozen=True)
 class Profile:
     name: str
-    fasta_seqs: int
     vcf_bytes: int
     bam_bytes: int
-    mzml_spectra: int
     docs: int
 
 
 PROFILES = {
-    "bench": Profile("bench", 56_000, 100_000_000, 12_000_000, 6_000, 600),
+    # 10k documents: the largest corpus that keeps a run of two measured
+    # passes within the run budget (README.md has the measured size curve)
+    "bench": Profile("bench", 100_000_000, 12_000_000, 10_000),
     # gen_vcf_xl / gen_bam_xl never go below 100k / 50k rows
-    "smoke": Profile("smoke", 2_000, 1, 1, 200, 300),
+    "smoke": Profile("smoke", 1, 1, 300),
 }
 
 
@@ -72,13 +70,6 @@ def _dir_bytes(path: str) -> int:
 
 
 # ----------------------------------------------------------------- bio data
-
-
-def _count_meth(fx: str) -> int:
-    """Methionine-starting sequences, counted in the generated FASTA text
-    (one sequence line per record)."""
-    with open(os.path.join(fx, "prot.fasta"), "rb") as fh:
-        return sum(1 for line in fh if line[:1] in (b"M", b"m"))
 
 
 def _layout(kind: str, fx: str) -> tuple[np.ndarray, np.ndarray]:
@@ -126,19 +117,11 @@ class Coordinates:
         return sum(len(v) for v in getattr(self, kind).values())
 
 
-def _build_bio(fx: str, prof: Profile) -> dict:
-    from exon_spark.queries import formats
+def _build_bio(fx: str, prof: Profile) -> None:
     from exon_spark.queries.fixtures_xl import gen_bam_xl, gen_vcf_xl
 
-    rng = random.Random(DATA_SEED)
-    formats._gen_fasta(fx, prof.fasta_seqs, rng)
-    # the 8 plain copies only serve the parallel-scan op this benchmark
-    # leaves out
-    shutil.rmtree(os.path.join(fx, "shards"), ignore_errors=True)
-    formats._gen_mzml(fx, prof.mzml_spectra, rng)
     gen_vcf_xl(fx, prof.vcf_bytes, workers=4, seed=DATA_SEED)
     gen_bam_xl(fx, prof.bam_bytes, workers=4, seed=DATA_SEED + 1)
-    return {"fasta_meth": _count_meth(fx), "mzml_spectra": prof.mzml_spectra}
 
 
 # ----------------------------------------------------------------- LLM data
@@ -248,7 +231,8 @@ def ensure(profile: str) -> Inputs:
     os.makedirs(bio)
     os.makedirs(llm)
     t0 = time.perf_counter()
-    man = {"key": key, "bio": _build_bio(bio, prof), "llm": _build_llm(llm, prof)}
+    _build_bio(bio, prof)
+    man = {"key": key, "llm": _build_llm(llm, prof)}
     man["gen_s"] = time.perf_counter() - t0
     tmp = man_path + ".tmp"
     with open(tmp, "w") as fh:

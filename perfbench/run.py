@@ -1,6 +1,6 @@
 """Run one benchmark workload and print one JSON result line.
 
-    python3 perfbench/run.py --workload bio_scan --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload region_lookup --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. The last stdout line is
 ``{"correct", "attempted", "failed", "metrics"}``: with ``--trace 0`` the
@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import re
 import shutil
@@ -28,9 +29,9 @@ from contextlib import contextmanager
 T0 = time.perf_counter()
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
-# set-ups per run: a cold start, then registration + DDL + warm again on
-# the same session; setup_s is their median
-SETUPS = 4
+# every run measures at least this many passes, so the per-pass metrics are
+# medians and not single samples
+MIN_PASSES = 2
 HARD_LIMIT_S = 170  # a run ends (and fails) before 180 s
 FIRST_RUN_LIMIT_S = 600  # a run that built its inputs may take longer
 
@@ -53,14 +54,14 @@ def _median(xs, default=0.0):
     return statistics.median(xs) if xs else default
 
 
-def tail(xs: list[float]) -> tuple[float, float]:
-    """(value, percentile) of the highest percentile with at least ten
-    samples above it; the maximum when there are ten samples or fewer."""
+TAIL_PCT = 90.0
+
+
+def tail(xs: list[float]) -> float:
+    """The nearest-rank 90th percentile. A run holds 4 to 18 latency samples,
+    too few for a percentile with ten samples beyond it."""
     s = sorted(xs)
-    n = len(s)
-    if n <= 10:
-        return s[-1], 100.0
-    return s[n - 11], 100.0 * (n - 10) / n
+    return s[math.ceil(TAIL_PCT / 100 * len(s)) - 1]
 
 
 # ------------------------------------------------------------------ the run
@@ -100,14 +101,12 @@ def drop_intermediates(spark) -> None:
         it.next()._2().unpersist(False)
 
 
-def setup(wl, tracer, spark=None):
-    """Session, registration, the workload's DDL and a page-cache warm.
-    Without ``spark`` this starts Spark (``ExonSession()``); with it, the
-    registration, DDL and warm run again on that session."""
+def setup(wl, tracer):
+    """Spark start, registration, the workload's DDL and a page-cache warm."""
     from exon_spark import ExonSession
 
     with tracer.span("setup"):
-        xs = ExonSession(spark)
+        xs = ExonSession()
         xs.spark.sparkContext.setLogLevel("ERROR")
         ctx = Ctx(xs.spark, xs, tracer)
         wl.ddl(ctx)
@@ -199,18 +198,22 @@ def _throughput(recs, mb_key, kinds) -> float:
     return sum(r[mb_key] for r in sel) / t if t > 0 else 0.0
 
 
-READ_KINDS = ("scan", "lookup", "query")
+READ_KINDS = ("lookup", "query")
 
 
-def end_to_end(setups, passes) -> dict:
-    ops = [r["wall"] for p in passes for r in p["ops"]]
-    tail_v, _pct = tail(ops)
+def latencies(passes) -> list[float]:
+    """Wall times of the lookups and queries of ``passes`` (COPYs left out)."""
+    return [r["wall"] for p in passes for r in p["ops"] if r["kind"] in READ_KINDS]
+
+
+def end_to_end(setup_s, passes) -> dict:
+    ops = latencies(passes)
     m = {
-        "setup_s": _median(setups),
+        "setup_s": setup_s,
         "wall_s": _median(p["wall"] for p in passes),
         "cpu_s": _median(p["cpu"] for p in passes),
         "op_p50_s": _median(ops),
-        "op_tail_s": tail_v,
+        "op_tail_s": tail(ops),
         "scan_mb_s": _median(_throughput(p["ops"], "input_mb", READ_KINDS) for p in passes),
     }
     return {k: {"value": v, "unit": E2E_UNITS[k]} for k, v in m.items()}
@@ -245,10 +248,9 @@ def _top_level(spans, name):
     return out
 
 
-def per_layer(wl, ins, tracer, setup_spans, passes, rest_by_pass) -> dict:
+def per_layer(ins, tracer, setup_spans, passes, rest_by_pass) -> dict:
     from perfbench.inputs import LLM_QUERIES
     from perfbench.probe import covered
-    from perfbench.workloads import BioScan
 
     traced = [p for p in passes if p["traced"]]
     plain = [p for p in passes if not p["traced"]]
@@ -263,8 +265,8 @@ def per_layer(wl, ins, tracer, setup_spans, passes, rest_by_pass) -> dict:
             s["end"] - s["start"] for s in by_op.get(op_id, ()) if s["name"] == phase
         )
 
-    put("session.register_s", _median([sum(_top_level(sp, "session.register")) for sp in setup_spans]), "s")
-    put("session.ddl_s", _median([sum(_top_level(sp, "session.ddl")) for sp in setup_spans]), "s")
+    put("session.register_s", sum(_top_level(setup_spans, "session.register")), "s")
+    put("session.ddl_s", sum(_top_level(setup_spans, "session.ddl")), "s")
     lookups = [r for p in traced for r in p["ops"] if r["kind"] == "lookup"]
     put("session.sql_s", _median([sum(_top_level(by_op.get(r["op_id"], []), "session.sql")) for r in lookups]), "s")
     put(
@@ -272,9 +274,6 @@ def per_layer(wl, ins, tracer, setup_spans, passes, rest_by_pass) -> dict:
         _median([sum(sum(_top_level(by_op.get(r["op_id"], []), "sources.read_format")) for r in p["ops"]) for p in traced]),
         "s",
     )
-    if isinstance(wl, BioScan):
-        for name, _fn in BioScan.SCANS:
-            put(f"sources.{name}_s", _median([r["wall"] for p in traced for r in p["ops"] if r["op"] == name]), "s")
 
     def per_pass(fn):
         return _median([fn(p, rest_by_pass[i]) for i, p in enumerate(traced)])
@@ -338,9 +337,8 @@ def per_layer(wl, ins, tracer, setup_spans, passes, rest_by_pass) -> dict:
     u_wall = _median([p["wall"] for p in plain])
     put("trace.overhead_pct", 100.0 * (t_wall / u_wall - 1.0) if u_wall else 0.0, "%")
     put("setup.fixture_gen_s", ins.gen_s, "s")
-    ops = [r["wall"] for p in passes for r in p["ops"]]
-    put("ops.samples", len(ops), "count")
-    put("ops.tail_pct", tail(ops)[1], "%")
+    put("ops.samples", len(latencies(passes)), "count")
+    put("ops.tail_pct", TAIL_PCT, "%")
     return {k: {"value": v, "unit": u} for k, (v, u) in m.items()}
 
 
@@ -416,7 +414,7 @@ def main(argv=None) -> int:
     ap.add_argument(
         "--smoke",
         action="store_true",
-        help="tiny inputs, one set-up, every op once with its output check",
+        help="tiny inputs, every op once with its output check",
     )
     args = ap.parse_args(argv)
 
@@ -431,9 +429,11 @@ def main(argv=None) -> int:
     os.environ["SPARK_GRAFT_CPUS"] = "4"
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(cache, "spark-local")
-    # -XX:-UsePerfData: the JVM would otherwise write /tmp/hsperfdata_<user>
+    # every JVM of the run (the codec jar build, the spark-submit launcher,
+    # the driver) would otherwise write /tmp/hsperfdata_<user>
+    os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        f'--driver-java-options "-Djava.io.tmpdir={tmp} -XX:-UsePerfData" '
+        f'--driver-java-options "-Djava.io.tmpdir={tmp}" '
         "--conf spark.ui.showConsoleProgress=false pyspark-shell"
     )
     import tempfile
@@ -456,17 +456,13 @@ def main(argv=None) -> int:
 
     ctx = None
     try:
-        setups, setup_spans = [], []
-        for i in range(1 if args.smoke else SETUPS):
-            t = time.perf_counter()
-            n0 = len(tracer.spans)
-            tracer.enabled, tracer.op = bool(args.trace), f"setup{i}"
-            ctx = setup(wl, tracer, ctx.spark if ctx is not None else None)
-            tracer.enabled = False
-            end = time.perf_counter()
-            setups.append(end - T0 - gen_wait if i == 0 else end - t)
-            setup_spans.append(tracer.spans[n0:])
-        log("setup_s samples: " + ", ".join(f"{x:.2f}" for x in setups))
+        tracer.enabled, tracer.op = bool(args.trace), "setup"
+        ctx = setup(wl, tracer)
+        tracer.enabled = False
+        # from process start to the first op ready, input generation excluded
+        setup_s = time.perf_counter() - T0 - gen_wait
+        setup_spans = list(tracer.spans)
+        log(f"setup {setup_s:.2f} s")
         os.makedirs(wl.out_dir, exist_ok=True)
         rest = probe.SparkRest(ctx.spark) if args.trace else None
         passes, rest_by_pass = [], []
@@ -497,12 +493,12 @@ def main(argv=None) -> int:
                     rest_by_pass.append(rest.groups(p["groups"]))
                 # traced runs end on an untraced pass: one before and one after
                 # the first traced pass, so warming does not bias the overhead
-                if time.perf_counter() >= t_end and (not args.trace or len(passes) >= 3):
+                if time.perf_counter() >= t_end and len(passes) >= MIN_PASSES + bool(args.trace):
                     break
         done = warm["ops"] + ([] if args.smoke else [r for p in passes for r in p["ops"]])
         failed = sum(not r["ok"] for r in done)
         if args.trace:
-            metrics = per_layer(wl, ins, tracer, setup_spans, passes, rest_by_pass)
+            metrics = per_layer(ins, tracer, setup_spans, passes, rest_by_pass)
             trace_dir = os.path.join(cache, "traces")
             os.makedirs(trace_dir, exist_ok=True)
             path = os.path.join(trace_dir, f"{args.workload}-seed{args.seed}.json")
@@ -520,10 +516,9 @@ def main(argv=None) -> int:
                 )
             log(f"spans written to {path}")
         else:
-            metrics = end_to_end(setups, passes)
-            ops = [r["wall"] for p in passes for r in p["ops"]]
+            metrics = end_to_end(setup_s, passes)
             log(
-                f"op_tail_s is p{tail(ops)[1]:.1f} of {len(ops)} op samples; "
+                f"op_tail_s is p{TAIL_PCT:.0f} of {len(latencies(passes))} samples; "
                 f"steal {_median([p['steal_pct'] for p in passes]):.2f}%"
             )
     except KeyboardInterrupt:

@@ -29,7 +29,7 @@ def _run(*args: str) -> dict:
     return json.loads(p.stdout.strip().splitlines()[-1])
 
 
-@pytest.mark.parametrize("workload", ["region_lookup", "llm_pipeline", "bio_scan"])
+@pytest.mark.parametrize("workload", ["region_lookup", "llm_pipeline"])
 def test_smoke_traced(workload):
     r = _run("--workload", workload, "--trace", "1")
     assert r["correct"] and r["failed"] == 0 and r["attempted"] > 0
@@ -40,7 +40,6 @@ def test_smoke_traced(workload):
         assert m["operators.action_s"]["value"] > 0
     else:
         assert m["sinks.bytes_written_mb"]["value"] > 0
-    if workload == "region_lookup":
         assert m["session.sql_s"]["value"] > 0
     traces = os.path.join(REPO, "perfbench", ".cache", "traces", f"{workload}-seed1.json")
     with open(traces) as fh:
@@ -55,10 +54,11 @@ def test_smoke_end_to_end():
     assert all(v["value"] > 0 for v in r["metrics"].values())
 
 
-def test_tail_has_ten_samples_above():
-    xs = list(range(1, 31))
-    assert tail(xs) == (20, 100.0 * 20 / 30)
-    assert tail([3.0, 1.0, 2.0]) == (3.0, 100.0)
+def test_tail_is_nearest_rank_p90():
+    assert tail(list(range(1, 31))) == 27
+    assert tail([3.0, 1.0, 2.0]) == 3.0
+    # 12 lookups of two passes: the faster of the two slowest
+    assert tail([1.0] * 10 + [3.5, 3.4]) == 3.4
 
 
 def test_covered_merges_overlaps():
