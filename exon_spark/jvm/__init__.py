@@ -4,15 +4,19 @@
 compression codec for BGZF (suffix ".bgz") that lets spark.read.text/csv
 fan a multi-GB bgzipped file out across executors with zero Python in the
 data path (see java/exonspark/hadoop/BgzfCodec.java). The jar is committed
-so the codec works without a JDK; when javac is available and the source
-is newer than the jar, ensure_bgzf_jar() rebuilds it.
+so the codec works without a JDK. It carries a digest of the Java sources
+it was built from; when javac is available and the sources' digest differs
+(their content changed — file mtimes play no part, so a fresh checkout
+keeps the committed jar), ensure_bgzf_jar() rebuilds it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import subprocess
+import zipfile
 
 _JVM_DIR = os.path.dirname(os.path.abspath(__file__))
 _SRC_DIR = os.path.join(_JVM_DIR, "java")
@@ -21,6 +25,9 @@ _JAR = os.path.join(_JVM_DIR, "bgzf-codec.jar")
 BGZF_CODEC_CLASS = "exonspark.hadoop.BgzfCodec"
 EXONCAT_FS_CLASS = "exonspark.hadoop.ExonCatFileSystem"
 VCF_DSV2_CLASS = "exonspark.spark.VcfBgzfSource"
+
+# jar entry holding the sha256 of the sources the jar was built from
+_DIGEST_ENTRY = "META-INF/exonspark-sources.sha256"
 
 
 def _compile_classpath() -> str | None:
@@ -51,9 +58,30 @@ def _compile_classpath() -> str | None:
     return os.pathsep.join(found)
 
 
+def _sources_digest(srcs: list[str]) -> str:
+    """sha256 over the sources' paths (relative to java/) and contents."""
+    h = hashlib.sha256()
+    for f in srcs:
+        h.update(os.path.relpath(f, _SRC_DIR).replace(os.sep, "/").encode())
+        h.update(b"\0")
+        with open(f, "rb") as fh:
+            h.update(fh.read())
+        h.update(b"\0")
+    return h.hexdigest()
+
+
+def _jar_digest() -> str | None:
+    try:
+        with zipfile.ZipFile(_JAR) as zf:
+            return zf.read(_DIGEST_ENTRY).decode().strip()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+
+
 def ensure_bgzf_jar() -> str | None:
     """Path to the codec jar, rebuilding from source when possible and
-    stale. Returns None only if the jar is absent AND cannot be built."""
+    stale (built from different sources). Returns None only if the jar is
+    absent AND cannot be built."""
     have_jar = os.path.exists(_JAR)
     srcs = sorted(
         os.path.join(root, f)
@@ -61,11 +89,8 @@ def ensure_bgzf_jar() -> str | None:
         for f in files
         if f.endswith(".java")
     )
-    src_newer = bool(srcs) and (
-        not have_jar
-        or max(os.path.getmtime(f) for f in srcs) > os.path.getmtime(_JAR)
-    )
-    if have_jar and not src_newer:
+    digest = _sources_digest(srcs) if srcs else None
+    if have_jar and (digest is None or _jar_digest() == digest):
         return _JAR
     javac = shutil.which("javac")
     jar = shutil.which("jar") or os.path.join(
@@ -75,7 +100,10 @@ def ensure_bgzf_jar() -> str | None:
     if not (javac and os.path.exists(jar) and cp and srcs):
         return _JAR if have_jar else None
     build = os.path.join(_JVM_DIR, "build")
-    os.makedirs(build, exist_ok=True)
+    shutil.rmtree(build, ignore_errors=True)  # no classes of deleted sources
+    os.makedirs(os.path.join(build, "META-INF"))
+    with open(os.path.join(build, _DIGEST_ENTRY), "w") as fh:
+        fh.write(digest + "\n")
     try:
         subprocess.run(
             [javac, "-encoding", "UTF-8", "-cp", cp, "-d", build, *srcs],

@@ -54,9 +54,9 @@ import org.apache.spark.unsafe.types.UTF8String;
  * datasources/vcf/table_provider.rs): '.'/'' => null for id/alt/qual/
  * filter/info, id/filter split on ';', alt on ',', pos bigint (non-numeric
  * => null, as try_cast), region filter = chrom equality + 1-based
- * inclusive pos bounds. FORMAT/sample columns are not served here — the
- * Python router only takes this path when the projection stays within the
- * leading fields.
+ * inclusive pos bounds. "formats" is the raw FORMAT + sample text (every
+ * field after INFO, tab-joined as in the file), null when the line has no
+ * ninth field.
  *
  * Options (all lowercase):
  *   path        local filesystem path of the .bgz/.gz BGZF VCF
@@ -83,7 +83,8 @@ public class VcfBgzfSource implements TableProvider {
           .add("alt", DataTypes.createArrayType(DataTypes.StringType, true), true)
           .add("qual", DataTypes.FloatType, true)
           .add("filter", DataTypes.createArrayType(DataTypes.StringType, true), true)
-          .add("info", DataTypes.StringType, true);
+          .add("info", DataTypes.StringType, true)
+          .add("formats", DataTypes.StringType, true);
 
   @Override
   public StructType inferSchema(CaseInsensitiveStringMap options) {
@@ -280,7 +281,9 @@ public class VcfBgzfSource implements TableProvider {
   static final class VcfPartitionReader implements PartitionReader<InternalRow> {
     // field indices in the VCF line for each projected column
     private final int[] fieldOf;
-    private final int[] colKind; // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str
+    // 0 str, 1 pos-long, 2 split';', 3 split',', 4 float, 5 dotnull-str,
+    // 6 rest-of-line (formats)
+    private final int[] colKind;
     private final int maxField;
 
     private final byte[][] regionChroms;
@@ -299,12 +302,15 @@ public class VcfBgzfSource implements TableProvider {
     private int llen;
 
     private final int[] tabs; // positions of line tabs (end of field i)
+    private int nTabs; // tabs found on the current line, capped at maxField + 1
 
     VcfPartitionReader(
         String path, String[] cols, String regionSpec, VcfPartition part)
         throws IOException {
-      String[] names = {"chrom", "pos", "id", "ref", "alt", "qual", "filter", "info"};
-      int[] kinds = {0, 1, 2, 0, 3, 4, 2, 5};
+      String[] names = {
+        "chrom", "pos", "id", "ref", "alt", "qual", "filter", "info", "formats"
+      };
+      int[] kinds = {0, 1, 2, 0, 3, 4, 2, 5, 6};
       fieldOf = new int[cols.length];
       colKind = new int[cols.length];
       int mx = 1; // chrom + pos always parsed for the region filter
@@ -430,6 +436,7 @@ public class VcfBgzfSource implements TableProvider {
           tabs[found++] = i;
         }
       }
+      nTabs = found;
       for (int f = found; f <= maxField; f++) {
         tabs[f] = llen; // missing trailing fields read as empty
       }
@@ -461,8 +468,12 @@ public class VcfBgzfSource implements TableProvider {
       return s > tabs[f] ? llen : s;
     }
 
-    /** End offset of projected column i's field in lbuf. */
+    /** End offset of projected column i's field in lbuf; "formats" runs
+     * to the end of the line. */
     int fieldEnd(int i) {
+      if (colKind[i] == 6) {
+        return llen;
+      }
       int f = fieldOf[i];
       int s = f == 0 ? 0 : tabs[f - 1] + 1;
       return s > tabs[f] ? llen : tabs[f];
@@ -489,6 +500,9 @@ public class VcfBgzfSource implements TableProvider {
           case 4:
             vals[i] = parseFloatNullable(s, e);
             break;
+          case 6:
+            vals[i] = hasFormats() ? utf8(s, e) : null;
+            break;
           default:
             vals[i] = isDot(s, e) ? null : utf8(s, e);
         }
@@ -503,6 +517,11 @@ public class VcfBgzfSource implements TableProvider {
         }
       }
       return false;
+    }
+
+    /** True when the line has a ninth field, i.e. "formats" is not null. */
+    boolean hasFormats() {
+      return nTabs >= 8;
     }
 
     private boolean isDot(int s, int e) {
@@ -655,6 +674,13 @@ public class VcfBgzfSource implements TableProvider {
               v.putNull(rowId);
             } else {
               v.putFloat(rowId, (Float) f);
+            }
+            break;
+          case 6:
+            if (core.hasFormats()) {
+              v.putByteArray(rowId, lbuf, s, e - s);
+            } else {
+              v.putNull(rowId);
             }
             break;
           default:

@@ -228,7 +228,12 @@ def get_spark(
 def register_all(spark: SparkSession) -> None:
     """Install the full exon_spark surface on an existing session:
     SQL functions (§2.4) + data sources (§2.1). Mirrors
-    ``ExonSession::new`` (exon_context_ext.rs:121-213)."""
+    ``ExonSession::new`` (exon_context_ext.rs:121-213). Functions, UDTFs
+    and data sources are session-scoped in Spark, so each session (also one
+    from ``spark.newSession()``) is registered once; later calls on the
+    same session return at once."""
+    if getattr(spark, "_exon_registered", False):
+        return
     from exon_spark.functions.registry import register_sql_functions
 
     register_sql_functions(spark)
@@ -237,6 +242,7 @@ def register_all(spark: SparkSession) -> None:
 
     register_sources(spark)
     register_scan_udtfs(spark)
+    spark._exon_registered = True  # type: ignore[attr-defined]
 
 
 class ExonSession:
@@ -299,7 +305,9 @@ class ExonSession:
                     query,
                 )
 
-        handled = maybe_handle_copy(self.spark, query)
+        handled = maybe_handle_copy(
+            self.spark, query, self._sql_with_region_pushdown
+        )
         if handled is None:
             handled = maybe_handle_create_table(self.spark, query)
         if handled is None:
@@ -321,15 +329,21 @@ class ExonSession:
         the semantics of the reference's designed-but-never-compiled
         chrom_optimizer_rule (docs/vcf_expression_rewriting.md rules A-K;
         SURVEY.md §4.6): the same index pruning now fires without the
-        ``vcf_region_filter`` spelling."""
+        ``vcf_region_filter`` spelling.
+
+        Each rebound table is read once, with the region; afterwards its
+        view is restored from the unfiltered frame kept in the registry
+        (``spark.sql`` resolves views during analysis, so the returned
+        frame keeps the region-bound plan)."""
         import re
 
         from exon_spark.sources import read_format
+        from exon_spark.sources.ddl import table_registry
 
         regions = re.findall(
             r"\w+_region_filter\(\s*'([^']+)'", query, re.IGNORECASE
         )
-        registry = getattr(self.spark, "_exon_tables", {}) or {}
+        registry = table_registry(self.spark)
         only_table: str | None = None  # raw rewrite binds ONE table only
         if not regions and registry:
             raw_regions, raw_table = _raw_rewrite_target(
@@ -344,9 +358,9 @@ class ExonSession:
         ):
             return self.spark.sql(query)
         region_opt = ",".join(regions)
-        rebound: list[tuple[str, str, str, dict]] = []
-        for name, (fmt, path, options) in registry.items():
-            if "regions" in options or "region" in options:
+        rebound: list[str] = []
+        for name, table in registry.items():
+            if "regions" in table.options or "region" in table.options:
                 continue
             if only_table is not None and name != only_table:
                 continue
@@ -354,24 +368,28 @@ class ExonSession:
                 continue
             try:
                 read_format(
-                    self.spark, fmt, path, regions=region_opt, **options
+                    self.spark,
+                    table.fmt,
+                    table.path,
+                    regions=region_opt,
+                    **table.options,
                 ).createOrReplaceTempView(name)
-                rebound.append((name, fmt, path, options))
+                rebound.append(name)
             except Exception:
                 continue  # leave the original view in place
         try:
             return self.spark.sql(query)  # analysis resolves views eagerly
         finally:
-            for name, fmt, path, options in rebound:
-                read_format(self.spark, fmt, path, **options).createOrReplaceTempView(
-                    name
-                )
+            for name in rebound:
+                registry[name].df.createOrReplaceTempView(name)
 
     def register_exon_table(self, name: str, path: str, fmt: str, **options) -> None:
-        """CREATE EXTERNAL TABLE analogue (exon_context_ext.rs:683-697)."""
-        from exon_spark.sources import read_format
+        """CREATE EXTERNAL TABLE analogue (exon_context_ext.rs:683-697):
+        the view is recorded like a CREATE'd one, so region predicates on
+        it get the same index pushdown."""
+        from exon_spark.sources.ddl import bind_table
 
-        read_format(self.spark, fmt, path, **options).createOrReplaceTempView(name)
+        bind_table(self.spark, name, fmt, path, options)
 
     def __getattr__(self, name: str):
         # read_fasta / read_vcf / ... resolve dynamically against sources

@@ -15,9 +15,10 @@ statement (Catalyst has no parser hooks from Python).
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 _COPY_RE = re.compile(
     r"^\s*COPY\s+(?P<src>\(.*\)|[A-Za-z_][\w.]*)\s+TO\s+'(?P<path>[^']+)'\s*"
@@ -58,9 +59,18 @@ def fastq_lines(df: DataFrame) -> DataFrame:
     )
 
 
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` plus an observed row count that its next SQL action (a
+    write) reports, so a sink learns how many records it wrote without a
+    second job. RDD actions do not report it."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
 def _write_lines(
     out: DataFrame, path: str, compression: str | None, single_file: bool
-) -> None:
+) -> int:
+    """Write one text line per row; returns the number of lines written."""
     if single_file:
         out = out.coalesce(1)
     if compression and compression.lower() == "zstd":
@@ -68,15 +78,16 @@ def _write_lines(
         # write executor-side through pyarrow's bundled codec instead —
         # still one file per partition, fully distributed (assumes a
         # shared/posix target path, same as any local-fs write)
-        _write_text_zstd(out, path)
-        return
+        return _write_text_zstd(out, path)
+    out, obs = _counted(out)
     w = out.write.mode("overwrite")
     if compression:
         w = w.option("compression", compression)
     w.text(path)
+    return obs.get["n"]
 
 
-def _write_text_zstd(lines_df: DataFrame, path: str) -> None:
+def _write_text_zstd(lines_df: DataFrame, path: str) -> int:
     import os
     import shutil
 
@@ -90,12 +101,14 @@ def _write_text_zstd(lines_df: DataFrame, path: str) -> None:
 
         fn = _os.path.join(path, f"part-{idx:05d}.fasta.zst")
         raw = pa.OSFile(fn, "wb")
+        n = 0
         with pa.CompressedOutputStream(raw, "zstd") as out:
             for row in it:
                 out.write((row.value + "\n").encode("utf-8"))
-        yield fn
+                n += 1
+        yield n
 
-    lines_df.rdd.mapPartitionsWithIndex(write_part).collect()
+    return sum(lines_df.rdd.mapPartitionsWithIndex(write_part).collect())
 
 
 def write_fasta(
@@ -103,8 +116,9 @@ def write_fasta(
     path: str,
     compression: str | None = None,
     single_file: bool = False,
-) -> None:
-    _write_lines(fasta_lines(df), path, compression, single_file)
+) -> int:
+    """Write ``df`` as FASTA; returns the number of records written."""
+    return _write_lines(fasta_lines(df), path, compression, single_file)
 
 
 def write_fastq(
@@ -112,18 +126,29 @@ def write_fastq(
     path: str,
     compression: str | None = None,
     single_file: bool = False,
-) -> None:
-    _write_lines(fastq_lines(df), path, compression, single_file)
+) -> int:
+    """Write ``df`` as FASTQ; returns the number of records written."""
+    return _write_lines(fastq_lines(df), path, compression, single_file)
 
 
-def maybe_handle_copy(spark: SparkSession, sql: str) -> DataFrame | None:
+def maybe_handle_copy(
+    spark: SparkSession,
+    sql: str,
+    run_sql: Callable[[str], DataFrame] | None = None,
+) -> DataFrame | None:
     """Intercept COPY ... STORED AS FASTA|FASTQ; returns a 1-row count
-    DataFrame (like the reference's sink result) or None if not a COPY."""
+    DataFrame (like the reference's sink result) or None if not a COPY.
+
+    The source query runs through ``run_sql`` (default ``spark.sql``;
+    ExonSession passes its region-pushdown entry point). The export is one
+    pass: the returned count is observed on the written rows."""
     m = _COPY_RE.match(sql)
     if not m:
         return None
     src = m.group("src").strip()
-    df = spark.sql(src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}")
+    df = (run_sql or spark.sql)(
+        src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
+    )
     path = m.group("path")
     fmt = (m.group("fmt") or "").upper()
     if not fmt:
@@ -136,14 +161,13 @@ def maybe_handle_copy(spark: SparkSession, sql: str) -> DataFrame | None:
         if fmt is None:
             return None
     comp = (m.group("comp") or "").lower() or None
-    n = df.count()
-    if fmt == "FASTA":
-        write_fasta(df, path + ".__tmp__", compression=comp, single_file=True)
+    if fmt in ("FASTA", "FASTQ"):
+        write = write_fasta if fmt == "FASTA" else write_fastq
+        n = write(df, path + ".__tmp__", compression=comp, single_file=True)
         _promote_single_file(path + ".__tmp__", path)
-    elif fmt == "FASTQ":
-        write_fastq(df, path + ".__tmp__", compression=comp, single_file=True)
-        _promote_single_file(path + ".__tmp__", path)
-    elif fmt == "PARQUET":
+        return spark.createDataFrame([(n,)], ["count"])
+    df, obs = _counted(df)
+    if fmt == "PARQUET":
         df.write.mode("overwrite").parquet(path)
     elif fmt == "JSONL":
         # Spark's json writer is line-delimited JSON — the LLM-corpus
@@ -155,7 +179,7 @@ def maybe_handle_copy(spark: SparkSession, sql: str) -> DataFrame | None:
         w.json(path)
     else:
         df.write.mode("overwrite").option("header", "true").csv(path)
-    return spark.createDataFrame([(n,)], ["count"])
+    return spark.createDataFrame([(obs.get["n"],)], ["count"])
 
 
 def _promote_single_file(tmp_dir: str, path: str) -> None:

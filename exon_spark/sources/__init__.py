@@ -65,7 +65,8 @@ def _datasource_classes():
 def ship_package(spark: SparkSession) -> None:
     """Make exon_spark importable on executors regardless of how the driver
     found it (cluster deploys included): zip the package and addPyFile."""
-    if getattr(spark, "_exon_spark_shipped", False):
+    sc = spark.sparkContext
+    if getattr(sc, "_exon_spark_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     zip_path = os.path.join(tempfile.gettempdir(), "exon_spark_pkg.zip")
@@ -77,18 +78,33 @@ def ship_package(spark: SparkSession) -> None:
                         full = os.path.join(root, fn)
                         zf.write(full, os.path.relpath(full, pkg_dir))
     try:
-        spark.sparkContext.addPyFile(zip_path)
+        sc.addPyFile(zip_path)
     except Exception:
         pass  # Spark Connect has no sparkContext; rely on installed package
-    spark._exon_spark_shipped = True  # type: ignore[attr-defined]
+    sc._exon_spark_shipped = True  # type: ignore[attr-defined]
 
 
 def register_sources(spark: SparkSession) -> None:
     """Register every record-format DataSource (mirrors the reference's
-    factory registration for its format keywords, exon_context_ext.rs:131-179)."""
+    factory registration for its format keywords, exon_context_ext.rs:131-179).
+
+    Python DataSources are session-scoped, so this runs once per session;
+    later calls return at once. Spark refuses to register a name that the
+    *active* session already resolves, so a second session (``newSession()``)
+    is made active while its sources are registered."""
+    if getattr(spark, "_exon_sources_registered", False):
+        return
     ship_package(spark)
-    for cls in _datasource_classes():
-        spark.dataSource.register(cls)
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    previous = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        for cls in _datasource_classes():
+            spark.dataSource.register(cls)
+    finally:
+        if previous.isDefined():
+            jsession.setActiveSession(previous.get())
+    spark._exon_sources_registered = True  # type: ignore[attr-defined]
 
 
 def read_format(spark: SparkSession, fmt: str, path: str, **options) -> DataFrame:

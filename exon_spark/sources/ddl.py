@@ -19,6 +19,7 @@ prunes/pushes down over it.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -142,20 +143,45 @@ def maybe_handle_create_table(spark: SparkSession, sql: str) -> DataFrame | None
         except Exception:
             pass
 
-    from exon_spark.sources import read_format
+    bind_table(spark, name, fmt, path, options)
+    # like the reference (and SQL), CREATE returns an empty result — the
+    # data is read via the view; collecting the CREATE must not scan
+    return spark.range(0).select()
 
-    df = read_format(spark, fmt, path, **options)
-    df.createOrReplaceTempView(name)
-    # remember the binding so ExonSession.sql can push literal
-    # x_region_filter(...) predicates back into reader options (§4.1)
+
+@dataclass(frozen=True)
+class ExonTable:
+    """A format view's binding: enough to re-read it with a pushed-down
+    region, plus the unfiltered reader frame the view was created from, so
+    the view can be restored without reading the file again."""
+
+    fmt: str
+    path: str
+    options: dict
+    df: DataFrame
+
+
+def table_registry(spark: SparkSession) -> dict[str, ExonTable]:
+    """The session's format views by name (created on first use)."""
     registry = getattr(spark, "_exon_tables", None)
     if registry is None:
         registry = {}
         spark._exon_tables = registry  # type: ignore[attr-defined]
-    registry[name] = (fmt, path, dict(options))
-    # like the reference (and SQL), CREATE returns an empty result — the
-    # data is read via the view; collecting the CREATE must not scan
-    return spark.range(0).select()
+    return registry
+
+
+def bind_table(
+    spark: SparkSession, name: str, fmt: str, path: str, options: dict
+) -> DataFrame:
+    """Read ``path`` as ``fmt``, register it as temp view ``name`` and
+    record the binding so ExonSession.sql can push literal
+    x_region_filter(...) predicates back into reader options (§4.1)."""
+    from exon_spark.sources import read_format
+
+    df = read_format(spark, fmt, path, **options)
+    df.createOrReplaceTempView(name)
+    table_registry(spark)[name] = ExonTable(fmt, path, dict(options), df)
+    return df
 
 
 _DROP_RE = re.compile(
@@ -171,7 +197,7 @@ def maybe_handle_drop_table(spark: SparkSession, sql: str) -> DataFrame | None:
     if not m:
         return None
     name = m.group("name").strip("`")
-    registry = getattr(spark, "_exon_tables", {}) or {}
+    registry = table_registry(spark)
     if name not in registry:
         return None
     spark.catalog.dropTempView(name)

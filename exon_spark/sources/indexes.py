@@ -7,15 +7,48 @@ time — mirrors the reference's indexed_file/ module).
 * ``.tbi`` tabix index — bgzf-compressed binary; region query returns BGZF
   virtual-offset chunks (indexed_bgzf_file.rs:52-112 semantics), implemented
   in pure Python over exon_spark.sources.bgzf.
+
+Parsed ``.tbi``/``.bai``/``.csi`` indexes are cached per process, keyed by
+(path, size, mtime), so repeated region lookups on one file parse its
+index once; callers treat the returned index as read-only.
 """
 
 from __future__ import annotations
 
+import functools
 import gzip
+import os
 import struct
 from dataclasses import dataclass
 
 from exon_spark.functions.region import parse_region
+
+_INDEX_CACHE_SIZE = 32
+
+
+def _cached_index(parse):
+    """Memoize an index parser on (absolute path, size, mtime) in a bounded
+    LRU. A rewritten index changes its size or mtime and is parsed again;
+    remote paths (object-store schemes) are parsed on every call, since
+    their stat would cost a round trip of its own."""
+    cached = functools.lru_cache(maxsize=_INDEX_CACHE_SIZE)(
+        lambda path, _size, _mtime_ns: parse(path)
+    )
+
+    @functools.wraps(parse)
+    def read(path: str):
+        from exon_spark.sources.fs import scheme_of
+
+        if scheme_of(path) is not None:
+            return parse(path)
+        try:
+            st = os.stat(path)
+        except OSError:
+            return parse(path)  # let the parser raise its own error
+        return cached(os.path.abspath(path), st.st_size, st.st_mtime_ns)
+
+    read.cache_clear = cached.cache_clear
+    return read
 
 
 @dataclass(frozen=True)
@@ -94,6 +127,7 @@ class TabixIndex:
     meta_char: str
 
 
+@_cached_index
 def read_tabix(path: str) -> TabixIndex:
     """Parse a .tbi file (SAMtools tabix spec §'The Tabix index file
     format'). The file is BGZF (valid gzip)."""
@@ -477,6 +511,7 @@ class BaiIndex:
 _BAI_PSEUDO_BIN = 37450
 
 
+@_cached_index
 def read_bai(path: str) -> BaiIndex:
     """Parse a .bai index (plain binary, SAM spec §5.2)."""
     from exon_spark.sources.fs import fs_open
@@ -682,6 +717,7 @@ class CsiIndex:
     names: tuple[str, ...] = ()
 
 
+@_cached_index
 def read_csi(path: str) -> CsiIndex:
     """Parse a .csi file (BGZF-compressed, magic CSI\\x01)."""
     from exon_spark.sources.fs import fs_open

@@ -8,7 +8,8 @@ the bottleneck (~20x slower per record than the reference's Rust parsers).
 These readers express the same parse as Column expressions over
 ``spark.read.text`` / ``spark.read.csv`` — whole-stage-codegen'd, Arrow-free,
 zero Python workers — and are used by ``read_format`` automatically when no
-Python-only option (regions, sequence_data_type, parse_info) is requested.
+Python-only option (sequence_data_type, parse_info, ...) is requested;
+indexed VCF region scans go to the Java DataSourceV2 reader.
 Schemas are identical to the DataSource schemas, so callers can't tell
 which path served them. gzip input is decompressed by the JVM codec;
 uncompressed input splits by byte range (Hadoop line reader semantics), so
@@ -19,9 +20,12 @@ reference's regrouped file scans (SURVEY.md §4.4).
 from __future__ import annotations
 
 import bisect
+import logging
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger("exon_spark")
 
 
 def _partition_cols(df: DataFrame, data_col: str = "value") -> list[str]:
@@ -136,6 +140,7 @@ _DSV2_TYPES = {
     "qual": "float",
     "filter": "array<string>",
     "info": "string",
+    "formats": "string",
 }
 
 
@@ -232,9 +237,11 @@ def read_vcf_region_dsv2(
     and parse the projected fields straight from the decompressed bytes
     into InternalRows. Beats the codec + spark.read.text route by skipping
     the LineReader Text copy, the full-line row, and the per-field
-    substring scans. Returns None when the projection needs FORMAT/sample
-    columns (not served) or the source class is absent from the session's
-    jar (caller falls back to the text/Python paths).
+    substring scans. Serves every base VCF column (``formats`` is the raw
+    FORMAT + sample text, as in the Python DataSource), so Catalyst prunes
+    the scan to whatever the query reads. Returns None when the projection
+    names a column outside the base schema or the file has no index that
+    names its contigs (caller falls back to the codec+text path).
 
     At cluster scale the planned ranges ship inside InputPartitions, so
     executors need only the file itself (any shared/posix fs); partition
@@ -295,9 +302,9 @@ def read_vcf_region_jvm(
     floors"), which is the entire gap to the reference on whole-chromosome
     scans (BASELINE vcf_region_chr1).
 
-    Used when index pruning would keep a large fraction of the file anyway
-    (routing in jvm_fast_reader); small regions stay on the tabix-pruned
-    Python path where pruning, not parse speed, dominates.
+    Every local, indexed, codec-enabled VCF region read is routed here
+    (jvm_fast_reader), whatever the region's size: the DSv2 reader and the
+    pruned codec view both inflate only the region's BGZF blocks.
 
     Row semantics match the Python DataSource exactly: same dot-null
     handling, same region_match filter (1-based inclusive,
@@ -312,18 +319,21 @@ def read_vcf_region_jvm(
 
     # Fastest route first: the Java DataSourceV2 parses projected fields
     # straight from the inflated bytes (no LineReader copy, no full-line
-    # row). Falls through to the codec+text path when the class is absent
-    # (stale jar) or the projection needs FORMAT/sample columns.
-    if set(want) <= set(_DSV2_TYPES):
-        import os as _os
-
-        if _os.path.exists(path + ".tbi") or _os.path.exists(path + ".csi"):
-            try:
-                dsv2 = read_vcf_region_dsv2(spark, path, regions, want)
-                if dsv2 is not None:
-                    return dsv2
-            except Exception:
-                pass
+    # row). Falls through to the codec+text path when it cannot serve the
+    # read, or fails (stale jar) — logged, since that path is slower.
+    try:
+        dsv2 = read_vcf_region_dsv2(spark, path, regions, want)
+    except Exception as e:
+        log.warning(
+            "VCF region read of %s: the DSv2 reader failed (%s: %s); "
+            "falling back to the slower codec+text scan",
+            path,
+            type(e).__name__,
+            e,
+        )
+        dsv2 = None
+    if dsv2 is not None:
+        return dsv2
 
     if len(region_list) > 1:
         # Per-region multiset semantics (pinned equal to the DSv2 and
@@ -446,7 +456,7 @@ def _vcf_codec_text_scan(
         "filter": lambda: split_null(6, ";"),
         "info": lambda: dot_null(g(7)),
         "formats": lambda: F.nullif(
-            F.array_join(F.slice(F.col("f"), 10, 2147483647), "\t"), F.lit("")
+            F.array_join(F.slice(F.col("f"), 9, 2147483647), "\t"), F.lit("")
         ),
     }
     exprs = {c: builders[c]() for c in needed}
@@ -467,11 +477,11 @@ def _vcf_codec_text_scan(
 
 
 def _vcf_region_jvm_route(path: str, options: dict, spark=None):
-    """Route a VCF region scan to the JVM codec path when (a) the file is a
-    local bgzf (.bgz, or .gz proven bgzf by its .tbi) with a tabix index,
-    (b) no Python-only parse option is set, and (c) the region's index
-    chunks cover a large fraction of the file — where chunk pruning saves
-    little and JVM parse throughput dominates."""
+    """Route a VCF region scan to the JVM path (DSv2, else codec+text) when
+    (a) the file is a local bgzf (.bgz, or .gz proven bgzf by its .tbi)
+    with a tabix or named CSI index, (b) no Python-only parse option is
+    set, (c) the session carries the codec, and (d) the index has chunks
+    for the region — whatever their share of the file."""
     regions = options.get("regions") or options.get("region")
     if not regions or not str(path).lower().endswith((".bgz", ".gz")):
         return None
